@@ -30,9 +30,10 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from r_e_hive__spark.functions import sql_ident
 from r_e_hive__spark.functions.text import (
+    WS_SPLIT,
     bind_once,
-    shingles,
     shingles_sql,
     tokens,
 )
@@ -89,7 +90,9 @@ def with_shingles(
         raise ValueError(f"unknown strategy {strategy!r}")
     return ensure_parallelism(df).select(
         F.col(id_col),
-        F.explode(F.array_distinct(shingles(F.col(text_col), k))).alias("shingle"),
+        F.explode(
+            F.array_distinct(F.expr(shingles_sql(sql_ident(text_col), k)))
+        ).alias("shingle"),
     )
 
 
@@ -110,14 +113,12 @@ def _exploded_shingles_pandas(
     subplans per consumer.
 
     Token parity with functions/text.tokens (Spark split, limit=-1) is
-    exact: the split pattern is Java's ASCII-only \s class
-    ([ 	
-
-]) — Python's \s is Unicode-aware and would tokenize
-    NBSP etc. differently — and re.split keeps leading AND trailing
-    empty tokens just like Spark's split; the < k fallback emits the
-    whole-doc single shingle exactly like shingles().  Pinned against
-    the expr path on edge strings (incl. Unicode whitespace) in
+    exact: both split on the one ``functions.text.WS_SPLIT`` literal
+    (Java's ASCII-only \s class — Python's \s is Unicode-aware and
+    would tokenize NBSP etc. differently), and re.split keeps leading AND
+    trailing empty tokens just like Spark's split; the < k fallback emits
+    the whole-doc single shingle exactly like shingles_sql().  Pinned
+    against the expr path on edge strings (incl. Unicode whitespace) in
     tests/test_dedup.py.
     """
     import re
@@ -134,7 +135,7 @@ def _exploded_shingles_pandas(
         StructField("_n", IntegerType(), False),
     ]
     out_schema = StructType(fields)
-    ws = re.compile(r"[ \t\n\x0B\f\r]+")  # Java \s, NOT Python \s
+    ws = re.compile(WS_SPLIT)  # Java \s, NOT Python \s
     cols = [id_col, *block_cols, text_col]
 
     def gen(batches):
@@ -258,7 +259,7 @@ def ngram_jaccard_pairs(
             # tree is the same expression (parity in tests/test_dedup.py).
             shingle_structs = F.expr(
                 f"transform(array(array_distinct("
-                f"{shingles_sql(f'`{text_col}`', k)})), _arr -> "
+                f"{shingles_sql(sql_ident(text_col), k)})), _arr -> "
                 f"transform(_arr, _s -> "
                 f"struct(_s AS shingle, size(_arr) AS _n)))[0]"
             )
@@ -273,19 +274,20 @@ def ngram_jaccard_pairs(
                 F.col("_sn._n").alias("_n"),
             )
         else:
+            distinct = F.array_distinct(
+                F.expr(shingles_sql(sql_ident(text_col), k))
+            )
             sh = src.select(
                 F.col(id_col).alias("_id"),
                 *[F.col(c).alias(f"_b_{c}") for c in block_cols],
-                F.explode(
-                    F.array_distinct(shingles(F.col(text_col), k))
-                ).alias("shingle"),
+                F.explode(distinct).alias("shingle"),
             )
             # per-doc shingle count is a NARROW projection of the source —
             # computing it from the exploded stream would re-run the whole
             # shingling pass (Spark recomputes shared subplans per consumer)
             sizes = src.select(
                 F.col(id_col).alias("_id"),
-                F.size(F.array_distinct(shingles(F.col(text_col), k))).alias("_n"),
+                F.size(distinct).alias("_n"),
             )
             # one row per DOC, not per input row: duplicate ids would
             # otherwise duplicate every pair through the n_a/n_b joins
@@ -649,7 +651,9 @@ def minhash_lsh_pairs(
         df.join(cand_ids, F.col(id_col) == F.col("_sid"), "left_semi")
         .select(
             F.col(id_col).alias("_sid"),
-            F.array_distinct(shingles(F.col(text_col), k)).alias("_sset"),
+            F.array_distinct(
+                F.expr(shingles_sql(sql_ident(text_col), k))
+            ).alias("_sset"),
         )
         .localCheckpoint(eager=False)
     )
@@ -811,7 +815,9 @@ def contamination_hits(
     """
     sh = lambda df, alias: df.select(  # noqa: E731
         F.col(id_col).alias(alias),
-        F.explode(F.array_distinct(shingles(F.col(text_col), k))).alias("shingle"),
+        F.explode(
+            F.array_distinct(F.expr(shingles_sql(sql_ident(text_col), k)))
+        ).alias("shingle"),
     )
     tsh = sh(train, "train_id")
     bsh = sh(bench, "bench_id")
@@ -902,7 +908,7 @@ def _windowed_hashes_pandas(
             StructField("_h", LongType(), False),
         ]
     )
-    ws = re.compile(r"[ \t\n\x0B\f\r]+")  # Java \s, NOT Python \s
+    ws = re.compile(WS_SPLIT)  # Java \s, NOT Python \s
     base = np.uint64(1099511628211)  # FNV64 prime; odd -> full-period mix
     powers = base ** np.arange(window - 1, -1, -1, dtype=np.uint64)
 

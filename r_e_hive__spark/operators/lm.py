@@ -52,16 +52,18 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from r_e_hive__spark.functions import sql_ident
 from r_e_hive__spark.operators import plan_fits_broadcast
-from r_e_hive__spark.operators.ranking import tokenize
+from r_e_hive__spark.operators.ranking import tokenize_sql
 
 BOS = "<s>"
 UNK = "<unk>"
 
 
-def _bigram_pairs(text: Column) -> Column:
-    """array<struct<w1,w2>> of (predecessor, token) transitions, built
-    entirely map-side from the token array: pair i is
+def _bigram_pairs(text_col: str) -> Column:
+    """array<struct<w1,w2>> of (predecessor, token) transitions of the
+    column named ``text_col``, built entirely map-side from the token
+    array (``ranking.tokenize_sql``): pair i is
     (BOS if i == 1 else tok[i-1], tok[i]).  A T-token document yields
     exactly T pairs; empty/NULL text yields an empty array (the caller's
     explode then drops the row — an unscorable document)."""
@@ -87,13 +89,13 @@ def _bigram_pairs(text: Column) -> Column:
             F.array().cast("array<struct<w1:string,w2:string>>")
         )
 
-    return bind_once(tokenize(text), build)
+    return bind_once(F.expr(tokenize_sql(sql_ident(text_col))), build)
 
 
 def _exploded_pairs(df: DataFrame, text_col: str, *keep) -> DataFrame:
     """(``*keep``, w1, w2) — one row per transition, map-only."""
     return df.select(
-        *keep, F.explode(_bigram_pairs(F.col(text_col))).alias("_p")
+        *keep, F.explode(_bigram_pairs(text_col)).alias("_p")
     ).select(*keep, "_p.w1", "_p.w2")
 
 

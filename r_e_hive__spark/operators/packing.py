@@ -180,7 +180,7 @@ def chunk_documents(
     documents with no tokens (NULL/empty/whitespace text) emit nothing.
 
     Tokenization is the repo's cross-engine ASCII-whitespace class
-    (operators/ranking.tokenize) — the DuckDB/Python differentials replay
+    (operators/ranking.tokenize_sql) — the DuckDB/Python differentials replay
     it exactly.  Rejoining with single spaces canonicalizes intra-doc
     whitespace, the standard chunker behavior.
 
@@ -197,10 +197,11 @@ def chunk_documents(
             f"overlap must be in [0, chunk_size), got {overlap} for "
             f"chunk_size {chunk_size}"
         )
-    from r_e_hive__spark.operators.ranking import tokenize
+    from r_e_hive__spark.functions import sql_ident
+    from r_e_hive__spark.operators.ranking import tokenize_sql
 
     stride = chunk_size - overlap
-    toks = tokenize(F.col(text_col))
+    toks = F.expr(tokenize_sql(sql_ident(text_col)))
     n = F.size("_toks")
     starts = F.sequence(F.lit(0), F.greatest(n - 1, F.lit(0)), F.lit(stride))
     return (

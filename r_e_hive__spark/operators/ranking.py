@@ -13,10 +13,10 @@ collects: corpus statistics (N, avgdl) travel as a one-row broadcast
 frame, so the whole computation stays one lazy plan end to end.
 
 Tokenization is the repo's cross-engine-parity class: lowercase + split
-on the EXPLICIT ASCII whitespace set ``[ \\t\\n\\x0B\\f\\r]+`` (Java's
-``\\s``), empties dropped — identical semantics in Spark executors, the
-DuckDB differential (RE2), and the pure-Python test reference (which must
-NOT use Python's Unicode-aware ``\\s``).  Same lesson as the Jaccard
+on ``functions.text.WS_SPLIT`` (Java's ``\\s`` spelled as its explicit
+ASCII class), empties dropped — identical semantics in Spark executors,
+the DuckDB differential (RE2), and the driver-side ``tokenize_py`` (which
+must NOT use Python's Unicode-aware ``\\s``).  Same lesson as the Jaccard
 shingler (BASELINE.md round-5 x2 notes).
 
 Scale shape at 100 TB:
@@ -41,46 +41,27 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from r_e_hive__spark.functions import sql_ident, sql_str_lit
+from r_e_hive__spark.functions.text import WS_SPLIT
 from r_e_hive__spark.operators import plan_fits_broadcast
-
-#: ASCII-whitespace split class — Java \s parity; see module docstring.
-TOKEN_SPLIT = r"[ \t\n\x0B\f\r]+"
-
-
-def tokenize(text) -> Column:
-    """Lowercased ASCII-whitespace tokens as array<string>, empties removed
-    (Spark's split keeps leading/trailing empty tokens)."""
-    return F.filter(
-        F.split(F.lower(text), TOKEN_SPLIT), lambda t: t != ""
-    )
 
 
 def tokenize_sql(text: str) -> str:
-    """SQL-string twin of :func:`tokenize` (round 11, the vector.py *_sql
-    build discipline): ``text`` is a SQL fragment.  The doubled
-    backslashes survive the SQL string literal as the SAME Java regex
-    source TOKEN_SPLIT feeds the Column form; parity pinned in
-    tests/test_ranking.py."""
+    """Lowercased whitespace tokens as array<string>, empties removed
+    (Spark's split keeps leading/trailing empty tokens), rendered as ONE
+    SQL fragment (``text`` is a SQL fragment, e.g. ``sql_ident(col)``).
+    Callers that need a Column wrap it: ``F.expr(tokenize_sql(...))``."""
     return (
-        f"filter(split(lower({text}), '[ \\\\t\\\\n\\\\x0B\\\\f\\\\r]+'), "
+        f"filter(split(lower({text}), {sql_str_lit(WS_SPLIT)}), "
         f"_t -> _t != '')"
     )
 
 
-def _sql_str_lit(s: str) -> str:
-    """Render a Python string as a SQL string literal that parses back to
-    the same value under the session's pinned escape semantics
-    (escapedStringLiterals=false): backslashes doubled first, then single
-    quotes doubled.  Value parity with the Column API on quote/backslash-
-    bearing terms is pinned in tests/test_ranking.py."""
-    return "'" + s.replace("\\", "\\\\").replace("'", "''") + "'"
-
-
 def tokenize_py(text: str) -> list[str]:
     """The same tokenization for driver-side query strings and test
-    references.  Reuses TOKEN_SPLIT (explicit ASCII class — NOT Python's
+    references.  Reuses WS_SPLIT (explicit ASCII class — NOT Python's
     Unicode ``\\s``) so the two paths cannot desynchronize."""
-    return [t for t in re.split(TOKEN_SPLIT, text.lower()) if t]
+    return [t for t in re.split(WS_SPLIT, text.lower()) if t]
 
 
 def term_postings(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -95,7 +76,7 @@ def term_postings(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     (one pass) and rides the groupBy key — it is constant per document,
     so it adds nothing to the shuffle's combine granularity.
     """
-    toks = tokenize(F.col(text_col))
+    toks = F.expr(tokenize_sql(sql_ident(text_col)))
     return (
         df.select(
             F.col(id_col), F.size(toks).alias("doc_len"), F.explode(toks).alias("term")
@@ -238,10 +219,10 @@ def bm25_search(
         # parser's default escape processing (escapedStringLiterals=false,
         # pinned in catalog._REQUIRED_CONFS) would otherwise rewrite
         # 'c:\temp' to 'c:<TAB>emp' and a trailing '\' would swallow the
-        # closing quote — diverging from the tok.isin(*terms) Column spec
-        in_list = ",".join(_sql_str_lit(t) for t in terms)
+        # closing quote — diverging from the postings path's term match
+        in_list = ",".join(sql_str_lit(t) for t in terms)
         bound = F.expr(
-            f"transform(array({tokenize_sql(f'`{text_col}`')}), _tk -> "
+            f"transform(array({tokenize_sql(sql_ident(text_col))}), _tk -> "
             f"struct(size(_tk) AS doc_len, "
             f"filter(_tk, _tok -> _tok IN ({in_list})) AS m))[0]"
         )
@@ -364,7 +345,7 @@ def save_postings(
     # tokenize+explode+groupBy corpus pass a second time (round-8 review:
     # "the one expensive pass" must actually be one)
     try:
-        src = df.sparkSession.read.parquet(f"{path}/postings")
+        src = df.sparkSession.read.parquet(_hadoop_literal(f"{path}/postings"))
     except Exception:
         # zero retrievable documents: the partitioned write emits no
         # parquet files and the read can't infer a schema — fall back to
@@ -376,27 +357,75 @@ def save_postings(
     ).write.mode("overwrite").parquet(f"{path}/stats")
 
 
+def _hadoop_literal(path: str) -> str:
+    """``path`` with Hadoop glob metacharacters escaped.  Spark's reader
+    glob-expands every path it is given, so an index saved under a
+    directory literally named ``a[1]`` would otherwise be read as the
+    pattern ``a1`` (and ``a*`` could match a sibling index)."""
+    return re.sub(r"([\\{}\[\]*?])", r"\\\1", path)
+
+
+def _index_fs(path: str):
+    """(pyarrow filesystem, filesystem path) for an index path as Spark
+    writes it: a plain local path, a ``file:`` URI, or any URI scheme
+    ``pyarrow.fs`` knows.  Local paths are taken verbatim — no glob and no
+    URI parsing, so ``[``, ``*`` and ``?`` are ordinary characters, as they
+    are for Spark's writer.  A scheme pyarrow cannot open raises a
+    ``ValueError`` naming the path."""
+    import os
+    from urllib.parse import urlsplit
+
+    import pyarrow as pa
+    import pyarrow.fs as pafs
+
+    scheme = urlsplit(path).scheme
+    if scheme in ("", "file"):
+        # "file:" plus an optional //authority; the rest is the path as is
+        local = re.sub(r"^file:(//[^/]*)?", "", path)
+        return pafs.LocalFileSystem(), os.path.abspath(local)
+    try:
+        return pafs.FileSystem.from_uri(path)
+    except (pa.ArrowException, OSError) as exc:
+        raise ValueError(
+            f"load_postings: cannot open {path!r} driver-side ({exc}); the "
+            "index layout is read with pyarrow.fs, which has no filesystem "
+            f"for the {scheme!r} scheme"
+        ) from exc
+
+
 def _postings_layout(spark, path: str):
-    """(stats_df, full_schema, n_buckets) for a :func:`save_postings`
-    layout, read DRIVER-SIDE via pyarrow — zero Spark jobs (round 12).
+    """(stats_df, full_schema, n_buckets, present_buckets) for a
+    :func:`save_postings` layout, read DRIVER-SIDE via pyarrow — zero
+    Spark jobs (round 12).
 
     The previous shape paid three jobs per load (stats schema inference,
     a ``first()`` to fetch n_buckets, postings schema inference) — ~0.33 s
     of every indexed search on this box, and at 100 TB each is a driver
     round-trip to the object store.  The stats table is one row and the
     postings schema is one parquet footer; both are driver-scale metadata
-    reads, exactly like the md5 bucket routing itself.  Types are mapped
-    with the same arrow→Spark conversion the Arrow runtime uses
+    reads, exactly like the md5 bucket routing itself.  ONE listing of
+    ``postings/`` (through ``pyarrow.fs``, see :func:`_index_fs`) yields
+    both that footer and the set of buckets holding data files.  Types
+    are mapped with the same arrow→Spark conversion the Arrow runtime uses
     (``from_arrow_schema``), so the frames are type-identical to the old
     scans (parity pinned in tests/test_ranking.py roundtrip tests)."""
-    import glob
-    import os
+    import posixpath
 
+    import pyarrow.fs as pafs
     import pyarrow.parquet as pq
     from pyspark.sql.pandas.types import from_arrow_schema
     from pyspark.sql.types import IntegerType, StructField, StructType
 
-    stats_tbl = pq.read_table(os.path.join(path, "stats"))
+    fs, root = _index_fs(path)
+    try:
+        stats_tbl = pq.read_table(f"{root}/stats", filesystem=fs)
+        listing = fs.get_file_info(
+            pafs.FileSelector(f"{root}/postings", recursive=True)
+        )
+    except FileNotFoundError as exc:
+        raise ValueError(
+            f"load_postings: {path} is not a postings layout ({exc})"
+        ) from exc
     if "n_buckets" not in stats_tbl.schema.names or stats_tbl.num_rows == 0:
         raise ValueError(
             f"load_postings: {path}/stats is not a postings layout"
@@ -406,20 +435,25 @@ def _postings_layout(spark, path: str):
         [tuple(row.values()) for row in stats_tbl.to_pylist()], stats_schema
     )
     n_buckets = int(stats_tbl.column("n_buckets")[0].as_py())
-    footers = glob.glob(
-        os.path.join(path, "postings", "term_bucket=*", "*.parquet")
-    )
+    footers = {}  # bucket -> one of its parquet files
+    for info in listing:
+        bucket_dir = posixpath.basename(posixpath.dirname(info.path))
+        if info.base_name.endswith(".parquet") and bucket_dir.startswith(
+            "term_bucket="
+        ):
+            footers.setdefault(int(bucket_dir.split("=", 1)[1]), info.path)
     if not footers:
         raise ValueError(
             f"load_postings: {path}/postings holds no parquet files"
         )
-    data_schema = from_arrow_schema(pq.read_schema(footers[0]))
+    footer = next(iter(footers.values()))
+    data_schema = from_arrow_schema(pq.read_schema(footer, filesystem=fs))
     # the partition column rides the directory names; Spark's own
     # discovery would type the 0..n_buckets-1 values as int
     full_schema = StructType(
         list(data_schema.fields) + [StructField("term_bucket", IntegerType())]
     )
-    return stats_df.drop("n_buckets"), full_schema, n_buckets
+    return stats_df.drop("n_buckets"), full_schema, n_buckets, set(footers)
 
 
 def load_postings(spark, path: str) -> tuple[DataFrame, DataFrame, int]:
@@ -428,8 +462,10 @@ def load_postings(spark, path: str) -> tuple[DataFrame, DataFrame, int]:
     into ``bm25_search(stats=...)``; layout metadata (schema, n_buckets,
     the stats row) is read driver-side — no Spark job runs to open the
     index (round 12, see :func:`_postings_layout`)."""
-    stats, full_schema, n_buckets = _postings_layout(spark, path)
-    postings = spark.read.schema(full_schema).parquet(f"{path}/postings")
+    stats, full_schema, n_buckets, _ = _postings_layout(spark, path)
+    postings = spark.read.schema(full_schema).parquet(
+        _hadoop_literal(f"{path}/postings")
+    )
     return postings, stats, n_buckets
 
 
@@ -450,17 +486,17 @@ def load_pruned_postings(
     PartitionFilter (plan-pinned), and a query whose terms all route to
     empty buckets returns an empty frame of the postings schema instead
     of scanning anything."""
-    import os
-
     from pyspark.sql.types import StructType
 
-    stats, full_schema, n_buckets = _postings_layout(spark, index_path)
+    stats, full_schema, n_buckets, present = _postings_layout(
+        spark, index_path
+    )
     buckets = sorted({term_bucket_py(t, n_buckets) for t in terms})
-    root = os.path.join(index_path, "postings")
+    root = f"{index_path}/postings"
     dirs = [
-        d
+        _hadoop_literal(f"{root}/term_bucket={b}")
         for b in buckets
-        if os.path.isdir(d := os.path.join(root, f"term_bucket={b}"))
+        if b in present
     ]
     if not dirs:
         empty_schema = StructType(

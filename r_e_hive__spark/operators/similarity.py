@@ -27,6 +27,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from r_e_hive__spark.functions import sql_ident
 from r_e_hive__spark.functions import vector as V
 from r_e_hive__spark.operators import (
     BLAS_MIN_BYTES,
@@ -34,10 +35,6 @@ from r_e_hive__spark.operators import (
     ensure_parallelism,
     resolve_strategy,
 )
-
-
-def _paired_cosine(exact: bool, a: Column, b: Column) -> Column:
-    return V.cosine_exact(a, b) if exact else V.cosine(a, b)
 
 
 def _auto_strategy(
@@ -90,11 +87,11 @@ def _topk_side(
     """
     vec, n2 = f"_{tag}vec", f"_{tag}n2"
     if exact_decimal:
-        side_vec = V.units_arr_sql(_bq(vec_col))
-        side_n2 = f"CAST({V.norm2_units_sql(_bq(vec))} AS DOUBLE)"
+        side_vec = V.units_arr_sql(sql_ident(vec_col))
+        side_n2 = f"CAST({V.norm2_units_sql(sql_ident(vec))} AS DOUBLE)"
     else:
-        side_vec = _bq(vec_col)
-        side_n2 = f"CAST({V.dot_sql(_bq(vec), _bq(vec))} AS DOUBLE)"
+        side_vec = sql_ident(vec_col)
+        side_n2 = f"CAST({V.dot_sql(sql_ident(vec), sql_ident(vec))} AS DOUBLE)"
     keep = [F.col(id_col)] + ([F.col(bucket_col)] if bucket_col else [])
     return df.select(*keep, F.expr(side_vec).alias(vec)).select(
         "*", F.expr(side_n2).alias(n2)
@@ -153,16 +150,15 @@ def brute_force_topk(
     # 3 dot products, but ‖a‖² and ‖b‖² are per-ROW quantities — computing
     # them once per side instead of once per PAIR cuts the pairwise decimal
     # work 3× (bit-identical: the norm is cast to double before the multiply
-    # exactly as in cosine_exact).  The exact path additionally hoists the
-    # decimal QUANTIZATION out of the pair loop (round 11): each side
-    # carries its micro-unit array (V.units_arr) so the O(pairs) dot is a
-    # plain BIGINT fold with one terminal decimal conversion — bit-identical
-    # to dot_exact (vector.py's equivalence note), ~3× on the sf0.1 x17/x3
-    # pair stages, and the shuffled/broadcast row stays fixed-width.
+    # exactly as in vector.cosine_units_sql).  The exact path additionally
+    # hoists the decimal QUANTIZATION out of the pair loop (round 11): each
+    # side carries its micro-unit array (V.units_arr_sql) so the O(pairs)
+    # dot is a plain BIGINT fold with one terminal decimal conversion (the
+    # exact decimal dot, vector.py's equivalence note), ~3× on the sf0.1
+    # x17/x3 pair stages, and the shuffled/broadcast row stays fixed-width.
     # Sides and the pair cosine are single parsed SQL expressions (round
     # 11): this constructor is also quantized_topk's shortlist stage, and
-    # its Column-API form was ~0.8 s of py4j per build.  Fragments mirror
-    # the Column spec exactly (tests/test_vector_units.py pins both modes).
+    # its Column-API form was ~0.8 s of py4j per build.
     if exact_decimal:
         pair_dot = V.dot_units_sql("_qvec", "_cvec")
     else:
@@ -172,7 +168,7 @@ def brute_force_topk(
         ensure_parallelism(candidates), cand_id, vec_col, exact_decimal, "c"
     )
     # NULL (never ANSI DIVIDE_BY_ZERO) for zero-norm vectors, matching
-    # cosine_exact's semantics; NULL-cosine rows are filtered after the
+    # vector.cosine_units_sql's semantics; NULL-cosine rows are filtered after the
     # rank window (unrankable — the unified omit contract)
     den = "SQRT((_qn2 * _cn2))"
     scored = q.crossJoin(c).select(
@@ -228,7 +224,7 @@ def ivf_topk(
         raise ValueError(f"unknown strategy {strategy!r}")
     # per-side norm hoist, same reasoning (and bit-identity) as
     # brute_force_topk; the exact path also carries micro-unit arrays so the
-    # probe-join dot is a BIGINT fold (round 11, see vector.dot_units)
+    # probe-join dot is a BIGINT fold (round 11, see vector.dot_units_sql)
     if exact_decimal:
         pair_dot = V.dot_units_sql("_qvec", "_cvec")
     else:
@@ -336,26 +332,28 @@ def train_kmeans(
     that scale are the same caveat every float reduction here carries).
 
     ``exact_decimal=True`` is the oracle-replayable mode (the x3/x17
-    discipline): assignment scores through ``dot_exact`` (decimal(12,6)
-    products, order-free), per-dim update sums as exact decimals, and
-    every centroid iterate QUANTIZED to 6 dp — so each iteration is a
-    pure function of the data with no float-reduction order anywhere,
-    and a DuckDB replay of the whole Lloyd recursion matches
-    coordinate-for-coordinate (tests/test_kmeans.py).  The quantization
-    costs < 1e-6 per coordinate per iteration — irrelevant to clustering
-    quality, decisive for cross-engine replayability.  Python-side
-    rounding uses the BINARY value of each double (``Decimal(x)``) —
-    DuckDB's double→decimal cast semantics.  Spark's own cast rounds the
-    double's SHORTEST DECIMAL RENDERING instead (the corpus_report
-    divergence class), which is why the driver-side quantization exists:
-    stored centroids are exact 6-dp decimals, so the literal→decimal
-    cast inside next iteration's ``dot_exact`` is a no-op in BOTH
-    engines and Spark's cast semantics never touch a non-6-dp centroid
-    double.  The one place Spark's cast DOES meet raw doubles is the
-    embedding values themselves (float→double→decimal inside dot_exact
-    and the update sums) — the identical path every x3/x25 exact_decimal
-    oracle already rides, fixture-verified; a replay on new data
-    inherits that same (rendering-tie, measure-tiny) caveat.
+    discipline): assignment scores through the exact decimal dot
+    (``vector.dot_units_sql``: decimal(12,6) products, order-free),
+    per-dim update sums as exact decimals, and every centroid iterate
+    QUANTIZED to 6 dp — so each iteration is a pure function of the data
+    with no float-reduction order anywhere, and a DuckDB replay of the
+    whole Lloyd recursion matches coordinate-for-coordinate
+    (tests/test_kmeans.py).  The quantization costs < 1e-6 per coordinate
+    per iteration — irrelevant to clustering quality, decisive for
+    cross-engine replayability.  Python-side rounding uses the BINARY
+    value of each double (``Decimal(x)``) — DuckDB's double→decimal cast
+    semantics.  Spark's own cast rounds the double's SHORTEST DECIMAL
+    RENDERING HALF_UP instead (the corpus_report divergence class;
+    tests/test_vector_units.py replays it with Python ``decimal``), which
+    is why the driver-side quantization exists: stored centroids are
+    exact 6-dp decimals, so the literal→decimal cast inside next
+    iteration's ``vector.units_lit_sql`` is a no-op in BOTH engines and
+    Spark's cast semantics never touch a non-6-dp centroid double.  The
+    one place Spark's cast DOES meet raw doubles is the embedding values
+    themselves (float→double→decimal inside ``vector.units_el_sql``, for
+    the scores and the update sums) — the identical path every x3/x25
+    exact_decimal oracle already rides, fixture-verified; a replay on new
+    data inherits that same (rendering-tie, measure-tiny) caveat.
     """
     import math
 
@@ -384,8 +382,9 @@ def train_kmeans(
         # whole-stage codegen) instead of a decimal(22,6) buffer — the same
         # value by integer exactness; converted back below via
         # Decimal(units)·10^-6, the identical rational the decimal sum held
+        v = sql_ident(vec_col)
         dims = [
-            F.sum(V.units_el(vec.getItem(i))).alias(f"_s{i}")
+            F.sum(F.expr(V.units_el_sql(f"{v}[{i}]"))).alias(f"_s{i}")
             for i in range(dim)
         ]
     else:
@@ -449,165 +448,78 @@ def train_kmeans(
     return centroids, it
 
 
-def _bq(name: str) -> str:
-    """Render a str column argument for the SQL-string builders with
-    ``F.col``'s semantics (ADVICE r11): dots separate nested-field path
-    segments (``s.embedding`` → ``` `s`.`embedding` ```, restoring the
-    pre-round-11 struct-field contract of the str-typed signatures), and
-    embedded backticks are doubled per segment (the Spark quoted-identifier
-    escape) so an unusual column name cannot break out of the identifier
-    and inject SQL fragments."""
-    return ".".join(
-        "`" + seg.replace("`", "``") + "`" for seg in name.split(".")
-    )
-
-
-def _scores_array_sql(
-    vec_sql: str, per_centroid_dots: list[str], cdim: int
-) -> str:
-    """array<struct<score,idx>> SQL source from pre-rendered per-centroid
-    dot fragments, with the loud dimension guard attached to centroid 0
-    exactly as the Column spec attaches it (CASE WHEN assert_true(...) IS
-    NULL THEN dot END ≡ F.when(F.assert_true(...).isNull(), dot))."""
-    # guard assembled by CONCATENATION, never str.format: vec_sql embeds a
-    # user identifier, and a '{'/'}' in it would turn .format into a
-    # KeyError/IndexError at build time (ADVICE r11)
-    guard_head = (
-        f"CASE WHEN assert_true((({vec_sql}) IS NULL) OR "
-        f"(size({vec_sql}) = {cdim}), "
-        f"'embedding dimension != centroid dimension {cdim}') IS NULL "
-        f"THEN "
-    )
-    elems = []
-    for j, d in enumerate(per_centroid_dots):
-        dd = guard_head + d + " END" if j == 0 else d
-        elems.append(f"struct({dd} AS score, {j} AS idx)")
-    return "array(" + ",".join(elems) + ")"
-
-
-def _centroid_scores_from_units(
-    vec: Column | str, units: Column | str, centroids: list[list[float]], cdim: int
-) -> Column:
-    """Exact-mode score array from a PRECOMPUTED micro-unit array (round
-    11): per centroid the dot is a BIGINT fold against a foldable literal
-    unit array — bit-identical to dot_exact(vec, lit-array) because both
-    sides ride the same quantization chain (vector.units_lit).  ``vec`` is
-    only consulted by the loud dimension guard, so callers that already
-    materialized ``units`` as a column pay one unit build per row for ALL
-    k scores.
-
-    Pass COLUMN NAMES (str) for both and the whole k-centroid array is
-    built as ONE parsed SQL expression instead of ~30 py4j round-trips
-    per centroid (round 11 — plan-construction time was 30–60 % of the
-    sub-second benched similarity rows; value identity vs the Column spec
-    pinned in tests/test_vector_units.py)."""
-    if isinstance(vec, str) and isinstance(units, str):
-        u = _bq(units)
-        dots = [
-            f"CAST({V.dot_units_sql(u, V.units_lit_sql(c))} AS DOUBLE)"
-            for c in centroids
-        ]
-        return F.expr(_scores_array_sql(_bq(vec), dots, cdim))
-    elems = []
-    for j, c in enumerate(centroids):
-        dot = V.dot_units(units, V.units_lit(c)).cast("double")
-        if j == 0:
-            dot = F.when(
-                F.assert_true(
-                    vec.isNull() | (F.size(vec) == cdim),
-                    F.lit(f"embedding dimension != centroid dimension {cdim}"),
-                ).isNull(),
-                dot,
-            )
-        elems.append(F.struct(dot.alias("score"), F.lit(j).alias("idx")))
-    return F.array(*elems)
-
-
 def _centroid_scores(
-    vec: Column | str, centroids: list[list[float]], exact: bool = False
+    vec: str,
+    centroids: list[list[float]],
+    exact: bool = False,
+    units: str | None = None,
 ) -> Column:
-    """array<struct<score,idx>> of cos-proportional scores per centroid.
+    """array<struct<score,idx>> of cos-proportional scores per centroid,
+    for the column NAMED ``vec``.
 
     Centroids are unit vectors, so dot(v, ĉ_j) ranks identically to
     cosine(v, c_j) (the ‖v‖ factor is constant across j).  All JVM-side:
-    k×dim literal arrays folded with zip_with/aggregate, one codegen stage,
-    no UDF.  ``exact`` routes through the decimal-exact dot in its
-    micro-unit formulation (oracle-stable ranking for declared queries,
-    bit-identical to the dot_exact spec — see vector.dot_units; the vector
-    quantizes ONCE per row via a bind_once let-binding instead of once per
-    centroid per element); the double path is the production one."""
+    k×dim literal arrays folded with zip_with/aggregate, no UDF, and the
+    whole k-centroid array is ONE parsed SQL expression (at ~0.85 ms per
+    py4j round-trip a Column-API loop cost ~0.8 s of every declared-query
+    build).  ``exact`` scores with the decimal-exact dot in its micro-unit
+    formulation (oracle-stable ranking for declared queries, see
+    functions/vector.py); the row's unit array is let-bound
+    (``transform(array(u), _cu -> ...)[0]``) so it quantizes ONCE per row,
+    not once per centroid.  A caller that already materialized that array
+    as a column passes its name as ``units`` and pays no unit build at
+    all; ``vec`` is then only consulted by the dimension guard.  The
+    double path is the production one."""
     dims = {len(c) for c in centroids}
     if len(dims) != 1:
         raise ValueError(f"centroids have inconsistent dimensions: {sorted(dims)}")
     (cdim,) = dims
-    if isinstance(vec, str):
-        # ONE parsed SQL expression for all k scores (round 11): the
-        # Column constructions below are the spec; at ~0.85 ms per py4j
-        # round-trip the k-centroid loop alone cost ~0.8 s of every
-        # declared-query build.  Value identity pinned in
-        # tests/test_vector_units.py.
-        v = _bq(vec)
-        if exact:
-            # same let-binding shape as bind_once(units_arr(vec), ...):
-            # transform(array(value), u -> body)[0] quantizes ONCE per row
-            dots = [
-                f"CAST({V.dot_units_sql('_cu', V.units_lit_sql(c))} AS DOUBLE)"
-                for c in centroids
-            ]
-            body = _scores_array_sql(v, dots, cdim)
-            return F.expr(
-                f"transform(array({V.units_arr_sql(v)}), _cu -> {body})[0]"
-            )
+    v = sql_ident(vec)
+    u = "_cu" if units is None else sql_ident(units)
+    if exact:
         dots = [
-            f"aggregate(zip_with({v}, {V.lit_vec_sql(c)}, "
-            f"(_dx, _dy) -> CAST(_dx AS DOUBLE) * _dy), "
-            f"CAST(0 AS DOUBLE), (_da, _dv) -> _da + _dv)"
+            f"CAST({V.dot_units_sql(u, V.units_lit_sql(c))} AS DOUBLE)"
             for c in centroids
         ]
-        return F.expr(_scores_array_sql(v, dots, cdim))
-    if exact:
-        from r_e_hive__spark.functions.text import bind_once
-
-        return bind_once(
-            V.units_arr(vec),
-            lambda u: _centroid_scores_from_units(vec, u, centroids, cdim),
-        )
-    elems = []
-    for j, c in enumerate(centroids):
-        carr = F.array(*[F.lit(float(x)) for x in c])
-        dot = F.aggregate(
-            F.zip_with(vec, carr, lambda x, y: x.cast("double") * y),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        if j == 0:
-            # zip_with null-pads a wrong-length vector and every score would
-            # go NULL -> an arbitrary bucket.  Fail LOUDLY instead (the same
-            # hardening hyperplane_bucket got in round 3; round-4 review
-            # found the k-means path missing it).  Checked once per row.
-            dot = F.when(
-                F.assert_true(
-                    vec.isNull() | (F.size(vec) == cdim),
-                    F.lit(f"embedding dimension != centroid dimension {cdim}"),
-                ).isNull(),
-                dot,
-            )
-        elems.append(F.struct(dot.alias("score"), F.lit(j).alias("idx")))
-    return F.array(*elems)
+    else:
+        dots = [V.dot_sql(v, V.lit_vec_sql(c)) for c in centroids]
+    # the loud dimension guard rides centroid 0: zip_with null-pads a
+    # wrong-length vector and every score would go NULL -> an arbitrary
+    # bucket, so the query fails instead (checked once per row; a NULL
+    # vector passes through; assert_true returns NULL on success).
+    # Assembled by CONCATENATION, never str.format: v embeds a user
+    # identifier, and a '{'/'}' in it would turn .format into a
+    # KeyError/IndexError at build time (ADVICE r11)
+    dots[0] = (
+        f"CASE WHEN assert_true((({v}) IS NULL) OR (size({v}) = {cdim}), "
+        f"'embedding dimension != centroid dimension {cdim}') IS NULL THEN "
+        + dots[0]
+        + " END"
+    )
+    body = (
+        "array("
+        + ",".join(f"struct({d} AS score, {j} AS idx)" for j, d in enumerate(dots))
+        + ")"
+    )
+    if exact and units is None:
+        body = f"transform(array({V.units_arr_sql(v)}), _cu -> {body})[0]"
+    return F.expr(body)
 
 
 def assign_centroid(
-    vec: Column | str, centroids: list[list[float]], exact: bool = False
+    vec: str, centroids: list[list[float]], exact: bool = False
 ) -> Column:
-    """Nearest-centroid id (struct-max: ties break to the larger idx,
-    consistently with probe_centroids' descending sort)."""
+    """Nearest-centroid id for the column named ``vec`` (struct-max: ties
+    break to the larger idx, consistently with probe_centroids' descending
+    sort)."""
     return F.array_max(_centroid_scores(vec, centroids, exact)).getField("idx")
 
 
 def probe_centroids(
-    vec: Column | str, centroids: list[list[float]], n_probe: int, exact: bool = False
+    vec: str, centroids: list[list[float]], n_probe: int, exact: bool = False
 ) -> Column:
-    """The ``n_probe`` nearest centroid ids, best first."""
+    """The ``n_probe`` nearest centroid ids for the column named ``vec``,
+    best first."""
     ordered = F.sort_array(_centroid_scores(vec, centroids, exact), asc=False)
     return F.transform(
         F.slice(ordered, 1, n_probe), lambda s: s.getField("idx")
@@ -732,14 +644,15 @@ def ivf_search(
 
 
 def hyperplane_bucket(
-    vec: Column | str,
+    vec: str,
     dim: int = 64,
     n_planes: int = 16,
     planes: list[list[int]] | None = None,
     exact: bool = False,
-    units: Column | str | None = None,
+    units: str | None = None,
 ) -> Column:
-    """Deterministic random-hyperplane sign bucket for a vector.
+    """Deterministic random-hyperplane sign bucket for the column named
+    ``vec``.
 
     Default direction: h_p component i = sin(p·1009 + i·9973) — a fixed,
     engine-portable pseudo-random direction (no rand(): determinism
@@ -750,9 +663,26 @@ def hyperplane_bucket(
     job).  With ``exact=True`` the projection is Σ decimal(v_i)·c_pi in
     exact decimal×integer arithmetic, so sign(<v,h_p>) is bit-reproducible
     in any engine that has exact decimals (the DuckDB oracle recomputes the
-    identical buckets — no float sign-boundary risk).
+    identical buckets — no float sign-boundary risk).  Only the SIGN
+    matters, and sign(Σ dec(12,6)·int) == sign(Σ units·int) — the exact
+    decimal sum times 10^6 — so the fold is pure BIGINT over the row's
+    micro-unit array; ``units`` names that array when the caller already
+    materialized it (one decimal cast per element per row, not per plane).
+    Bound: |Σ| ≤ dim·10^6·max|x|·max|c| — loud ANSI overflow far above any
+    unit-norm corpus.
 
-    Bucket = integer whose bit p is sign(<v, h_p>)."""
+    Bucket = integer whose bit p is sign(<v, h_p>).  Built as ONE parsed
+    SQL expression (a Column-API loop of n_planes interpreted folds cost
+    ~2-3 s of py4j per x4 build).
+
+    Runtime dimension guard: zip_with null-pads a short vector, which
+    would silently zero the whole projection (bit=0) while an exact-SQL
+    oracle's NULL-skipping sum could still yield bit=1 — a latent
+    cross-engine bucket divergence (ADVICE r3).  It fails loudly instead,
+    let-bound ONCE per row (``transform(array(guarded), _hb -> ...)[0]``)
+    on the array every plane folds.  A NULL vector is NOT a dimension
+    error: it passes through (projection NULL → every bit 0 → bucket 0;
+    downstream exact-similarity verification filters such rows)."""
     if exact and planes is None:
         raise ValueError(
             "hyperplane_bucket: exact=True requires frozen integer planes "
@@ -765,136 +695,40 @@ def hyperplane_bucket(
                 f"hyperplane_bucket: need {n_planes} planes of dim {dim}, "
                 f"got {len(planes)} planes (wrong-length planes: {bad})"
             )
-    if isinstance(vec, str) and (units is None or isinstance(units, str)):
-        # One-parse SQL fast path (round 11, the vector.py *_sql build
-        # discipline): the Column loop below builds n_planes interpreted
-        # folds (~2-3 s of py4j per x4 build).  The rendered expression is
-        # the same arithmetic with the dimension guard let-bound ONCE
-        # (transform(array(guarded), _hb -> ...)[0]) instead of re-stated
-        # per plane — the guard either raises or passes the value through,
-        # so evaluating it once per row is value-identical.  Parity pinned
-        # in tests/test_similarity.py.
-        v = _bq(vec)
-        # guard assembled by concatenation, not str.format — v embeds a
-        # user identifier (ADVICE r11, same reasoning as _scores_array_sql)
-        guard_head = (
-            f"CASE WHEN assert_true((({v}) IS NULL) OR (size({v}) = {dim}), "
-            f"'hyperplane_bucket: vector dim != {dim}') IS NULL "
-            f"THEN "
-        )
-        bits = []
-        for p in range(n_planes):
-            if planes is not None and exact:
-                arr = "array(" + ",".join(f"{int(c)}L" for c in planes[p]) + ")"
-                proj = (
-                    f"aggregate(zip_with(_hb, {arr}, (_x, _s) -> _x * _s), "
-                    f"CAST(0 AS BIGINT), (_da, _dv) -> _da + _dv)"
-                )
-                zero_sql = "CAST(0 AS BIGINT)"
-            elif planes is not None:
-                arr = "array(" + ",".join(str(int(c)) for c in planes[p]) + ")"
-                proj = (
-                    f"aggregate(zip_with(_hb, {arr}, "
-                    f"(_x, _s) -> CAST(_x AS DOUBLE) * _s), "
-                    f"CAST(0 AS DOUBLE), (_da, _dv) -> _da + _dv)"
-                )
-                zero_sql = "CAST(0 AS DOUBLE)"
-            else:
-                arr = (
-                    "array("
-                    + ",".join(str(p * 1009 + i * 9973) for i in range(dim))
-                    + ")"
-                )
-                proj = (
-                    f"aggregate(zip_with(_hb, {arr}, "
-                    f"(_x, _s) -> CAST(_x AS DOUBLE) * SIN(_s)), "
-                    f"CAST(0 AS DOUBLE), (_da, _dv) -> _da + _dv)"
-                )
-                zero_sql = "CAST(0 AS DOUBLE)"
-            bits.append(
-                f"(CASE WHEN {proj} > {zero_sql} "
-                f"THEN CAST({2 ** p} AS BIGINT) ELSE CAST(0 AS BIGINT) END)"
-            )
-        if exact:
-            src = _bq(units) if units is not None else V.units_arr_sql(v)
-        else:
-            src = v
-        bound = guard_head + src + " END"
-        return F.expr(
-            f"transform(array({bound}), _hb -> {' + '.join(bits)})[0]"
-        )
-    # Runtime dimension guard: zip_with null-pads a short vector, which
-    # would silently zero the whole projection (bit=0) while an exact-SQL
-    # oracle's NULL-skipping sum could still yield bit=1 — a latent
-    # cross-engine bucket divergence (ADVICE r3).  Fail loudly instead.
-    # A NULL vector is NOT a dimension error: it passes through (projection
-    # NULL → every bit 0 → bucket 0, the pre-guard behavior; downstream
-    # exact-similarity verification filters such rows).  assert_true
-    # returns NULL on success, so the WHEN always selects vec.
-    vec = F.when(
-        F.assert_true(
-            vec.isNull() | (F.size(vec) == dim),
-            f"hyperplane_bucket: vector dim != {dim}",
-        ).isNull(),
-        vec,
-    )
+    v = sql_ident(vec)
     bits = []
     for p in range(n_planes):
-        if planes is not None:
-            comps = F.array(*[F.lit(int(c)) for c in planes[p]])
-            if exact:
-                # round 11: the projection's SIGN is all that matters, and
-                # sign(Σ dec(12,6)·int) == sign(Σ units·int) — the exact
-                # decimal sum times 10^6.  Integer coefficients need no
-                # quantization, so the fold is pure BIGINT; ``units``
-                # (V.units_arr, materialized by the caller) replaces one
-                # decimal cast per element PER PLANE with one per element
-                # per row.  Bound: |Σ| ≤ dim·10^6·max|x|·max|c| — loud ANSI
-                # overflow far above any unit-norm corpus.
-                # the loud dimension guard must ride the branch that is
-                # actually evaluated: the exact path never touches the
-                # guarded ``vec`` wrapper below, so re-apply it to ``u``
-                # (NULL vec passes through exactly as before: NULL units →
-                # NULL proj → bit 0)
-                u_raw = units if units is not None else V.units_arr(vec)
-                u = F.when(
-                    F.assert_true(
-                        vec.isNull() | (F.size(vec) == dim),
-                        f"hyperplane_bucket: vector dim != {dim}",
-                    ).isNull(),
-                    u_raw,
-                )
-                comps_long = F.expr(
-                    "array(" + ",".join(f"{int(c)}L" for c in planes[p]) + ")"
-                )
-                proj = F.aggregate(
-                    F.zip_with(u, comps_long, lambda x, s: x * s),
-                    F.lit(0).cast("long"),
-                    lambda acc, v: acc + v,
-                )
-                zero: Column = F.lit(0).cast("long")
-            else:
-                proj = F.aggregate(
-                    F.zip_with(vec, comps, lambda x, s: x.cast("double") * s),
-                    F.lit(0.0),
-                    lambda acc, v: acc + v,
-                )
-                zero = F.lit(0.0)
+        # (plane components, per-element product, zero of the fold's type)
+        if planes is None:
+            comps = [str(p * 1009 + i * 9973) for i in range(dim)]
+            term, zero = "CAST(_x AS DOUBLE) * SIN(_s)", "CAST(0 AS DOUBLE)"
+        elif exact:
+            comps = [f"{int(c)}L" for c in planes[p]]
+            term, zero = "_x * _s", "CAST(0 AS BIGINT)"
         else:
-            comps = F.array(*[F.lit(p * 1009 + i * 9973) for i in range(dim)])
-            proj = F.aggregate(
-                F.zip_with(vec, comps, lambda x, s: x.cast("double") * F.sin(s)),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            )
-            zero = F.lit(0.0)
-        bits.append(
-            F.when(proj > zero, F.lit(2 ** p).cast("long")).otherwise(F.lit(0).cast("long"))
+            comps = [str(int(c)) for c in planes[p]]
+            term, zero = "CAST(_x AS DOUBLE) * _s", "CAST(0 AS DOUBLE)"
+        proj = (
+            f"aggregate(zip_with(_hb, array({','.join(comps)}), "
+            f"(_x, _s) -> {term}), {zero}, (_da, _dv) -> _da + _dv)"
         )
-    out = bits[0]
-    for b in bits[1:]:
-        out = out + b
-    return out
+        bits.append(
+            f"(CASE WHEN {proj} > {zero} "
+            f"THEN CAST({2 ** p} AS BIGINT) ELSE CAST(0 AS BIGINT) END)"
+        )
+    if exact:
+        src = sql_ident(units) if units is not None else V.units_arr_sql(v)
+    else:
+        src = v
+    # guard assembled by concatenation, not str.format — v embeds a
+    # user identifier (ADVICE r11, same reasoning as _centroid_scores)
+    bound = (
+        f"CASE WHEN assert_true((({v}) IS NULL) OR (size({v}) = {dim}), "
+        f"'hyperplane_bucket: vector dim != {dim}') IS NULL THEN "
+        + src
+        + " END"
+    )
+    return F.expr(f"transform(array({bound}), _hb -> {' + '.join(bits)})[0]")
 
 
 def lsh_neighbor_pairs(
@@ -925,12 +759,12 @@ def lsh_neighbor_pairs(
         )
     # round 11: the exact path carries each row's micro-unit array instead
     # of the raw vector — bucketing, norm², and the O(pairs) verify dot all
-    # run as BIGINT folds over it (bit-identical to the decimal spec, see
-    # vector.dot_units), and the unit quantization happens ONCE per row
+    # run as BIGINT folds over it (the exact decimal values, see
+    # vector.py's units note), and the unit quantization happens ONCE per row
     # instead of once per plane/pair element.
     if exact_decimal:
         src = ensure_parallelism(df).withColumn(
-            "_lsh_u", F.expr(V.units_arr_sql(_bq(vec_col)))
+            "_lsh_u", F.expr(V.units_arr_sql(sql_ident(vec_col)))
         )
         with_bucket = src.select(
             F.col(id_col),
@@ -962,13 +796,13 @@ def lsh_neighbor_pairs(
             # per-row denominator part hoisted out of the O(pairs)
             # verification (the semantic_dedup discipline): computed ONCE
             # per vector here, so each candidate pair costs ONE dot
-            # aggregate instead of five (cosine_exact's den>0 guard
+            # aggregate instead of five (a per-pair cosine's den>0 guard
             # re-derives both norms per evaluation -- measured as the
             # dominant cost of the sf1 verify stage).  Each pair cosine
             # below reproduces the functions/vector.py formula bit for bit:
-            # exact den = sqrt(na2_double * nb2_double), double den =
-            # norm(a) * norm(b).
-            F.expr(V.norm_sql(_bq(vec_col))).alias("_den"),
+            # exact den = sqrt(na2_double * nb2_double) (cosine_units_sql),
+            # double den = norm(a) * norm(b) (cosine_sql).
+            F.expr(V.norm_sql(sql_ident(vec_col))).alias("_den"),
         )
         pair_col = vec_col
     def _chunk(bucket: Column, i: int) -> Column:
@@ -1126,27 +960,25 @@ def semantic_dedup(
     # caller orders afterwards.
     #
     # Exact mode carries each row's micro-unit array (_sd_u) through the
-    # exchange so the O(pairs) dot is a BIGINT fold (vector.dot_units,
-    # bit-identical to dot_exact) — measured 7.6 s → 2.5 s on the sf0.1
+    # exchange so the O(pairs) dot is a BIGINT fold (vector.dot_units_sql,
+    # the exact decimal dot) — measured 7.6 s → 2.5 s on the sf0.1
     # declared x17 with outputs pinned identical.  The double path carries
     # the raw vector as before.
     #
     # Per-row denominator part, hoisted out of the O(pairs) join:
-    # exact path carries norm² as double (cosine_exact's den is
-    # sqrt(na2*nb2)); double path carries the norm itself (cosine's den is
-    # na*nb) — each pair cosine below reproduces the corresponding
+    # exact path carries norm² as double (cosine_units_sql's den is
+    # sqrt(na2*nb2)); double path carries the norm itself (cosine_sql's den
+    # is na*nb) — each pair cosine below reproduces the corresponding
     # functions/vector.py formula bit for bit.
     if exact_decimal:
         pair_col = "_sd_u"
         base = ensure_parallelism(df).withColumn(
-            "_sd_u", F.expr(V.units_arr_sql(_bq(vec_col)))
+            "_sd_u", F.expr(V.units_arr_sql(sql_ident(vec_col)))
         )
         base = base.withColumn(
             "_sd_cluster",
             F.array_max(
-                _centroid_scores_from_units(
-                    vec_col, "_sd_u", centroids, len(centroids[0])
-                )
+                _centroid_scores(vec_col, centroids, True, units="_sd_u")
             ).getField("idx"),
         ).withColumn(
             "_sd_den",
@@ -1157,7 +989,7 @@ def semantic_dedup(
         base = (
             ensure_parallelism(df)
             .withColumn("_sd_cluster", assign_centroid(vec_col, centroids, False))
-            .withColumn("_sd_den", F.expr(V.norm_sql(_bq(vec_col))))
+            .withColumn("_sd_den", F.expr(V.norm_sql(sql_ident(vec_col))))
         )
     # EXPLICIT numPartitions: the pair join is compute-bound (one array dot
     # per candidate pair) on tiny shuffle bytes, exactly the shape where
@@ -1542,11 +1374,11 @@ def quantize_embeddings(
 
     Both columns are built as single parsed SQL expressions (round 11):
     the Column-API form cost ~0.4 s of py4j round-trips per build and this
-    operator is constructed twice per quantized_topk plan.  The SQL mirrors
-    the spec token for token (same casts, same HALF_UP round, same
-    zero-scale CASE); value identity is pinned in tests/test_vector_units.py.
+    operator is constructed twice per quantized_topk plan.  Values are
+    pinned in tests/test_vector_units.py (same casts, same HALF_UP round,
+    same zero-scale CASE as a Column-API construction of the formula).
     """
-    v, sc = _bq(vec_col), _bq(scale_col)
+    v, sc = sql_ident(vec_col), sql_ident(scale_col)
     with_scale = df.withColumn(
         scale_col,
         F.expr(
@@ -1655,10 +1487,9 @@ def quantized_topk(
     qvec = F.broadcast(queries.select(query_id, F.col(vec_col).alias("_qv")))
     # exact_decimal: decimal-exact rerank cosines (order-independent,
     # hash-stable vs a SQL oracle) — the declared x25 query's mode, in the
-    # round-11 micro-unit formulation (bit-identical to cosine_exact, see
-    # vector.dot_units: num/den built from the same quantization, norms
-    # hoisted per shortlist row instead of re-derived per cosine_exact
-    # evaluation); the production default keeps the double fast path.
+    # round-11 micro-unit formulation (vector.cosine_units_sql: each
+    # vector quantized once into a unit-array column, num/den as BIGINT
+    # folds over it); the production default keeps the double fast path.
     if exact_decimal:
         joined = (
             cvec.join(pairs, cand_id)
@@ -1666,17 +1497,12 @@ def quantized_topk(
             .withColumn("_cu", F.expr(V.units_arr_sql("_cv")))
             .withColumn("_qu", F.expr(V.units_arr_sql("_qv")))
         )
-        den = (
-            f"SQRT((CAST({V.norm2_units_sql('_qu')} AS DOUBLE) "
-            f"* CAST({V.norm2_units_sql('_cu')} AS DOUBLE)))"
-        )
         scored = joined.select(
             query_id,
             cand_id,
-            F.expr(
-                f"round(CASE WHEN {den} > 0 THEN "
-                f"CAST({V.dot_units_sql('_qu', '_cu')} AS DOUBLE) / {den} END, 6)"
-            ).alias("cosine"),
+            F.expr(f"round({V.cosine_units_sql('_qu', '_cu')}, 6)").alias(
+                "cosine"
+            ),
         )
     else:
         scored = (

@@ -270,16 +270,17 @@ def x4_neardup_pairs(spark, sf_dir):
     the exact all-pairs baseline; the LSH-banded variant
     (lsh_neighbor_pairs) covers the sub-quadratic path."""
     (embeddings,) = T(spark, sf_dir, "embeddings")
-    from r_e_hive__spark.functions.vector import cosine_exact
+    from r_e_hive__spark.functions import vector as V
 
-    a = embeddings.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("_va"))
-    b = embeddings.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("_vb"))
+    units = F.expr(V.units_arr_sql("embedding"))
+    a = embeddings.select(F.col("vec_id").alias("id_a"), units.alias("_ua"))
+    b = embeddings.select(F.col("vec_id").alias("id_b"), units.alias("_ub"))
     return (
         a.join(b, F.col("id_a") < F.col("id_b"))
         .select(
             "id_a",
             "id_b",
-            F.round(cosine_exact(F.col("_va"), F.col("_vb")), 6).alias("cosine"),
+            F.round(F.expr(V.cosine_units_sql("_ua", "_ub")), 6).alias("cosine"),
         )
         .where(F.col("cosine") >= 0.30)
         .orderBy(F.desc("cosine"), "id_a", "id_b")

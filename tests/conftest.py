@@ -12,6 +12,20 @@ SF_SMOKE = "/root/testdata/sf0.001"
 # (tools/drive_driver_contract.py), not by this suite — no constant here
 
 
+def _box_size() -> tuple[int, str]:
+    """(local cores, driver heap) for the test session, sized from the box
+    it runs on: cores from SPARK_GRAFT_CPUS (the tier-1 command exports
+    it), else os.cpu_count(); the heap from SPARK_GRAFT_DRIVER_MEM, else
+    half of physical RAM — local[N] runs every executor inside the driver
+    JVM, and the Python workers and the OS need the other half."""
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
+    heap = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if not heap:
+        phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+        heap = f"{max(1, phys // 2**31)}g"
+    return cpus, heap
+
+
 @pytest.fixture(scope="session")
 def spark():
     from r_e_hive__spark.session import get_spark
@@ -25,7 +39,13 @@ def spark():
     # would never see.  No-op when a real protobuf wheel exists; returns
     # False (and the TWS twin test skips) when no runtime is available.
     enable_protobuf_shim()
-    s = get_spark(app_name="rehive-tests", master="local[8]", shuffle_partitions=8)
+    cpus, heap = _box_size()
+    s = get_spark(
+        app_name="rehive-tests",
+        master=f"local[{cpus}]",
+        shuffle_partitions=8,
+        extra_conf={"spark.driver.memory": heap},
+    )
     # the JVM captured the hooked env at launch; restore the process-global
     # PYTHONPATH so other child processes don't import the shim (r7 ADVICE)
     descope_worker_hook()

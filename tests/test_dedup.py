@@ -914,38 +914,54 @@ def test_jaccard_carried_n_plan_single_pass_join_free(spark, documents):
     assert "Join" in p_legacy
 
 
-def test_shingles_sql_twin_matches_column_spec(spark):
-    """Round-11 build-time pin: shingles_sql/tokens_sql (the one-parse SQL
-    renderers behind ngram_jaccard_pairs' carry path) must reproduce
-    shingles()/tokens() value-for-value on edge strings — whitespace runs,
-    Unicode whitespace (Java \\s is ASCII-only), short docs (< k fallback),
-    empty and NULL documents."""
+# Java's regex \s class, written out here independently of the code under
+# test: Python's own \s would also split on NBSP, \u2003 and \x1c-\x1f
+JAVA_WS = r"[ \t\n\x0b\x0c\r]+"
+
+TOKEN_EDGE_ROWS = [
+    "a b c d e",
+    "  leading and   multiple   spaces ",
+    "one",
+    "two words",
+    "three exact words",
+    "",
+    None,
+    "tab\tand\nnewline\rmix",
+    "vt\x0bff\x0csplit here",
+    "nbsp\u00a0stays one token",  # Unicode WS: NOT a Java \s split
+    "em\u2003space and\x1cfs stay",  # Python \s would split both
+]
+
+
+def test_shingles_sql_matches_python_reference(spark):
+    """text.tokens and text.shingles_sql (the renderer behind every expr
+    shingling path) against re.split over Java's ASCII \\s class: kept
+    leading/trailing empty tokens, Unicode whitespace NOT a separator,
+    the < k whole-doc fallback, and empty/NULL documents (a NULL doc
+    shingles to [''], as the Arrow shingler's ``text or ""`` does)."""
+    import re
+
     from pyspark.sql import functions as F
 
-    from r_e_hive__spark.functions.text import (
-        shingles,
-        shingles_sql,
-        tokens,
-        tokens_sql,
-    )
+    from r_e_hive__spark.functions import sql_ident
+    from r_e_hive__spark.functions.text import shingles_sql, tokens
 
-    rows = [
-        ("a b c d e",),
-        ("  leading and   multiple   spaces ",),
-        ("one",),
-        ("two words",),
-        ("",),
-        (None,),
-        ("tab\tand\nnewline\rmix",),
-        ("nbsp stays one token",),  # Unicode WS: NOT a Java \s split
-    ]
-    df = spark.createDataFrame(rows, "t STRING")
+    def ref_shingles(t, k):
+        toks = re.split(JAVA_WS, t or "")
+        if len(toks) < k:
+            return [" ".join(toks)]
+        return [" ".join(toks[i : i + k]) for i in range(len(toks) - k + 1)]
+
+    df = spark.createDataFrame([(t,) for t in TOKEN_EDGE_ROWS], "t STRING")
     got = df.select(
-        tokens(F.col("t")).alias("tok_c"),
-        F.expr(tokens_sql("`t`")).alias("tok_s"),
-        shingles(F.col("t"), 3).alias("sh_c"),
-        F.expr(shingles_sql("`t`", 3)).alias("sh_s"),
+        "t",
+        tokens(F.col("t")).alias("tok"),
+        F.expr(shingles_sql(sql_ident("t"), 3)).alias("sh3"),
+        F.expr(shingles_sql(sql_ident("t"), 1)).alias("sh1"),
     ).collect()
+    assert len(got) == len(TOKEN_EDGE_ROWS)
     for r in got:
-        assert r["tok_c"] == r["tok_s"]
-        assert r["sh_c"] == r["sh_s"]
+        t = r["t"]
+        assert r["tok"] == (None if t is None else re.split(JAVA_WS, t)), t
+        assert r["sh3"] == ref_shingles(t, 3), t
+        assert r["sh1"] == ref_shingles(t, 1), t

@@ -11,13 +11,14 @@ regex work per document, 449 s → 3.4 s at sf0.1 after let-binding via
 ``functions.text.bind_once``).
 
 The round-10 pin covered four constructs by name; this lint generalizes it
-into a regression gate over EVERY Column-returning constructor in the five
-hot-path modules (functions/text.py, operators/{lm,quality,dedup,
-ranking}.py):
+into a regression gate over EVERY Column-returning constructor and every
+``*_sql`` renderer in the five hot-path modules (functions/text.py,
+operators/{lm,quality,dedup,ranking}.py):
 
 * an introspective walker enumerates the constructors (return annotation
-  ``Column``), so a NEW constructor fails the suite until it declares its
-  leaf budget in ``EXPECTED`` below;
+  ``Column``) and renderers (name ``*_sql``, return annotation ``str``,
+  parsed with ``F.expr``), so a NEW one fails the suite until it declares
+  its leaf budget in ``EXPECTED`` below;
 * each constructor's built tree is rendered and every expensive leaf
   counted — counts are pinned EXACTLY (not ``<= 1``), so any edit that
   adds a second tokenization, even a linear top-level one, fails;
@@ -70,7 +71,7 @@ EXPECTED: dict[str, dict[str, int]] = {
     "text.normalize_ccnet": {},                # pandas_udf body, no JVM leaves
     "text.punct_ratio": {"regexp_": 1},
     "text.quality_score": {"split": 1, "regexp_": 1},  # r11: was 2 splits
-    "text.shingles": {"split": 1},
+    "text.shingles_sql": {"split": 1},
     "text.stopword_ratio": {"split": 1},       # r11 fix: was 2
     "text.subword_tokens": {"regexp_": 1},
     "text.tokens": {"split": 1},
@@ -83,7 +84,7 @@ EXPECTED: dict[str, dict[str, int]] = {
     "dedup._sig_match_fraction": {},
     "dedup._simhash_chunk_expr": {},
     "ranking.term_bucket": {},
-    "ranking.tokenize": {"split": 1},
+    "ranking.tokenize_sql": {"split": 1},
 }
 
 
@@ -105,10 +106,11 @@ def _modules():
 
 
 def _build_args(sig: inspect.Signature):
-    """Dummy arguments for a constructor: Column params get F.col, ints a
-    small literal, the conventional `grams`/`words` params a real gram
-    build / the stopword tuple (so grams-consuming constructors show the
-    leaf their binding must not duplicate).  Returns None when a required
+    """Dummy arguments for a constructor: Column params get F.col, str
+    params (column names / SQL fragments) the bare name, ints a small
+    literal, the conventional `grams`/`words` params a real gram build /
+    the stopword tuple (so grams-consuming constructors show the leaf
+    their binding must not duplicate).  Returns None when a required
     param can't be satisfied (constructor then must be excluded on its
     merits — today none is)."""
     args = []
@@ -124,15 +126,18 @@ def _build_args(sig: inspect.Signature):
             args.append(2)
         elif ann is Column or ann == "Column" or ann is inspect.Parameter.empty:
             args.append(F.col(p.name))
+        elif ann is str or ann == "str":
+            args.append(p.name)
         else:
             return None
     return args
 
 
 def enumerate_constructors() -> dict[str, Column]:
-    """Every Column-returning constructor in the five hot-path modules,
-    instantiated with dummy args.  Requires a live session (classic
-    Columns wrap JVM expressions)."""
+    """Every Column-returning constructor and ``*_sql`` renderer in the
+    five hot-path modules, instantiated with dummy args (a renderer's SQL
+    parsed with ``F.expr``).  Requires a live session (classic Columns
+    wrap JVM expressions)."""
     out = {}
     for mname, mod in _modules().items():
         for name, fn in sorted(vars(mod).items()):
@@ -143,7 +148,8 @@ def enumerate_constructors() -> dict[str, Column]:
             except (ValueError, TypeError):
                 continue
             ret = sig.return_annotation
-            if not (ret is Column or ret == "Column"):
+            renderer = name.endswith("_sql") and (ret is str or ret == "str")
+            if not (ret is Column or ret == "Column" or renderer):
                 continue
             if name == "bind_once":  # the binder itself, not a constructor
                 continue
@@ -152,7 +158,7 @@ def enumerate_constructors() -> dict[str, Column]:
                 f"{mname}.{name}: cannot build dummy args for {sig} — "
                 "extend _build_args or document why it's out of scope"
             )
-            col = fn(*args)
+            col = F.expr(fn(*args)) if renderer else fn(*args)
             assert isinstance(col, Column), (mname, name)
             out[f"{mname}.{name}"] = col
     return out

@@ -112,16 +112,17 @@ def test_exact_decimal_sum_and_product_parity(spark):
 
 
 def test_exact_vector_dot_parity(spark, oracle_smoke):
-    """functions/vector.py dot_exact vs the oracle's list-decimal dot
-    (queries/similarity.py _DU_DOT) on real sf0.001 embeddings — the parity
-    every X3/X4 declared query rests on."""
-    from r_e_hive__spark.functions.vector import dot_exact
+    """functions/vector.py's exact (micro-unit) dot vs the oracle's
+    list-decimal dot (queries/similarity.py _DU_DOT) on real sf0.001
+    embeddings — the parity every X3/X4 declared query rests on."""
+    from r_e_hive__spark.functions import vector as V
 
     emb = load_table(spark, SF_SMOKE, "embeddings").where(F.col("vec_id") < 12)
+    n2 = V.norm2_units_sql(V.units_arr_sql("embedding"))
     got = {
         r.vec_id: r.d
         for r in emb.select(
-            "vec_id", dot_exact(F.col("embedding"), F.col("embedding")).cast("double").alias("d")
+            "vec_id", F.expr(f"CAST({n2} AS DOUBLE)").alias("d")
         ).collect()
     }
     want = {

@@ -416,6 +416,48 @@ def test_load_postings_rejects_non_index_layout(spark, tmp_path):
         R.load_postings(spark, bad)
 
 
+def _indexed_matches_inline(spark, docs, path):
+    q = "the data model"
+    res, _, _ = R.bm25_search_indexed(spark, path, q, "doc_id", top_k=15)
+    inline = R.bm25_search(docs, "text", "doc_id", q, top_k=15)
+    got = [r.asDict() for r in res.collect()]
+    assert got == [r.asDict() for r in inline.collect()] and got
+    postings, _, n_buckets = R.load_postings(spark, path)
+    assert n_buckets == 8
+    assert postings.count() == R.term_postings(docs, "text", "doc_id").count()
+
+
+def test_postings_index_opens_on_glob_character_path(spark, documents, tmp_path):
+    """An index saved under a directory whose name holds glob
+    metacharacters opens and searches like the inline path.  A decoy
+    index sits where the UNESCAPED pattern idx[1]*? would land (idx1x), so
+    a reader that globbed the path would return the decoy's results."""
+    docs = documents.select("doc_id", "text")
+    decoy = docs.where(F.col("doc_id") % 2 == 0)
+    R.save_postings(decoy, "text", "doc_id", str(tmp_path / "idx1x"), n_buckets=8)
+    path = str(tmp_path / "idx[1]*?")
+    R.save_postings(docs, "text", "doc_id", path, n_buckets=8)
+    _indexed_matches_inline(spark, docs, path)
+
+
+def test_postings_index_opens_on_file_uri(spark, documents, tmp_path):
+    docs = documents.select("doc_id", "text")
+    path = "file://" + str(tmp_path / "bm25_uri_index")
+    R.save_postings(docs, "text", "doc_id", path, n_buckets=8)
+    _indexed_matches_inline(spark, docs, path)
+
+
+def test_postings_index_unreadable_scheme_names_path(spark):
+    """A scheme the driver-side layout read has no filesystem for fails
+    with a ValueError naming the path — not 'holds no parquet files' or a
+    bare ArrowInvalid."""
+    path = "s3a://bucket/bm25_index"
+    with pytest.raises(ValueError, match=re.escape(repr(path))):
+        R.load_postings(spark, path)
+    with pytest.raises(ValueError, match=re.escape(repr(path))):
+        R.bm25_search_indexed(spark, path, "data", "doc_id")
+
+
 def test_x23_fast_duckdb_disk_pairing_value_aligned(tmp_path):
     """Round-11 (VERDICT r10 item 6): the x23 fast twin's DuckDB pairing
     is symmetric — prep COPYs the postings/stats to an on-disk parquet
@@ -452,7 +494,7 @@ def test_x23_fast_duckdb_disk_pairing_value_aligned(tmp_path):
 
 
 def test_bm25_backslash_quote_terms_match_column_spec(spark):
-    """ADVICE-r11 pin: the inline IN-list renders terms via _sql_str_lit
+    """ADVICE-r11 pin: the inline IN-list renders terms via sql_str_lit
     (backslashes doubled BEFORE quotes).  Under the session's pinned
     escapedStringLiterals=false, a term like c:\\temp or a trailing-
     backslash term must match the same docs as the postings path, whose
@@ -486,13 +528,13 @@ def test_bm25_backslash_quote_terms_match_column_spec(spark):
 
 
 def test_sql_str_lit_roundtrips_adversarial_terms(spark):
-    """_sql_str_lit(s) must parse back to exactly s for every term shape
+    """sql_str_lit(s) must parse back to exactly s for every term shape
     the tokenizer can emit (backslashes, quotes, mixes, trailing '\\')."""
-    from r_e_hive__spark.operators.ranking import _sql_str_lit
+    from r_e_hive__spark.functions import sql_str_lit
 
     cases = ["plain", "c:\\temp", "end\\", "o'brien", "'\\''", "\\", "a''b\\\\c"]
     got = spark.sql(
-        "SELECT " + ",".join(_sql_str_lit(c) for c in cases)
+        "SELECT " + ",".join(sql_str_lit(c) for c in cases)
     ).first()
     assert list(got) == cases
 
@@ -506,26 +548,35 @@ def test_escaped_string_literals_conf_is_pinned():
     assert _REQUIRED_CONFS["spark.sql.parser.escapedStringLiterals"] == "false"
 
 
-def test_tokenize_sql_twin_matches_column_spec(spark):
-    """Round-11 build-time pin: tokenize_sql must reproduce tokenize()
-    value-for-value — lowercase, ASCII-only split (Unicode whitespace is
-    NOT a separator), empty-token removal, NULL/empty docs."""
-    from pyspark.sql import functions as F
+def test_tokenize_sql_matches_python_reference(spark):
+    """tokenize_sql (the corpus tokenizer behind term_postings, the inline
+    BM25 path, packing and the bigram LM) against re.split over Java's
+    ASCII \\s class written out independently, and against the driver-side
+    tokenize_py: lowercase, Unicode whitespace NOT a separator, empty-token
+    removal, NULL/empty docs."""
+    from r_e_hive__spark.functions import sql_ident
+    from r_e_hive__spark.operators.ranking import tokenize_py, tokenize_sql
 
-    from r_e_hive__spark.operators.ranking import tokenize, tokenize_sql
-
+    java_ws = r"[ \t\n\x0b\x0c\r]+"
     rows = [
-        ("The QUICK  brown\tfox\nruns",),
-        (" leading trailing ",),
-        ("",),
-        (None,),
-        ("nbsp stays one token",),
-        ("x0b\x0bsplits here",),
+        "The QUICK  brown\tfox\nruns",
+        " leading trailing ",
+        "",
+        None,
+        "nbsp\u00a0stays one token",
+        "x0b\x0bsplits here",
+        "ÉCOLE em\u2003space\x1cfs Stays",
+        "\r\n\f",
     ]
-    df = spark.createDataFrame(rows, "t STRING")
+    df = spark.createDataFrame([(t,) for t in rows], "t STRING")
     got = df.select(
-        tokenize(F.col("t")).alias("c"),
-        F.expr(tokenize_sql("`t`")).alias("s"),
+        "t", F.expr(tokenize_sql(sql_ident("t"))).alias("s")
     ).collect()
+    assert len(got) == len(rows)
     for r in got:
-        assert r["c"] == r["s"], r
+        t = r["t"]
+        if t is None:
+            assert r["s"] is None
+            continue
+        want = [x for x in re.split(java_ws, t.lower()) if x]
+        assert r["s"] == want == tokenize_py(t), t

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import math
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -79,16 +80,14 @@ def test_lsh_pairs_identical_to_legacy_shape(spark, embeddings):
         ).collect()
     }
     # Legacy shape, inlined: same bucketing, wide dedup-then-verify.
-    from r_e_hive__spark.operators.similarity import (
-        _paired_cosine,
-        hyperplane_bucket,
-    )
+    from r_e_hive__spark.functions import vector as V
+    from r_e_hive__spark.operators.similarity import hyperplane_bucket
 
     r_bits = 16 // 4
     with_bucket = small.select(
         "vec_id",
         "embedding",
-        hyperplane_bucket(F.col("embedding"), 64, 16).alias("_bucket"),
+        hyperplane_bucket("embedding", 64, 16).alias("_bucket"),
     )
     chunks = with_bucket.select(
         "vec_id",
@@ -124,7 +123,7 @@ def test_lsh_pairs_identical_to_legacy_shape(spark, embeddings):
             .dropDuplicates(["id_a", "id_b"])
             .withColumn(
                 "cosine",
-                F.round(_paired_cosine(False, F.col("_va"), F.col("_vb")), 6),
+                F.round(F.expr(V.cosine_sql("_va", "_vb")), 6),
             )
             .where(F.col("cosine") >= 0.25)
             .select("id_a", "id_b", "cosine")
@@ -226,7 +225,7 @@ def test_hyperplane_bucket_null_vector_passes_through(spark):
         r["vec_id"]: r["b"]
         for r in df.select(
             "vec_id",
-            hyperplane_bucket(F.col("embedding"), dim=8, n_planes=4).alias("b"),
+            hyperplane_bucket("embedding", dim=8, n_planes=4).alias("b"),
         ).collect()
     }
     assert rows[2] == 0
@@ -306,7 +305,7 @@ def test_ivf_numpy_strategy_matches_expr(spark):
         "/root/testdata/sf0.001/embeddings.parquet"
     ).select("vec_id", "embedding")
     cand = emb.withColumn(
-        "bucket", assign_centroid(F.col("embedding"), _IVF_CENTROIDS)
+        "bucket", assign_centroid("embedding", _IVF_CENTROIDS)
     )
     q = (
         emb.where(F.col("vec_id") < 4)
@@ -314,7 +313,7 @@ def test_ivf_numpy_strategy_matches_expr(spark):
             F.col("vec_id").alias("query_id"),
             "embedding",
             F.explode(
-                probe_centroids(F.col("embedding"), _IVF_CENTROIDS, 2)
+                probe_centroids("embedding", _IVF_CENTROIDS, 2)
             ).alias("bucket"),
         )
     )
@@ -386,40 +385,89 @@ def test_persisted_ivf_index_partition_pruned_search(spark, clustered, tmp_path)
     )
 
 
-def test_hyperplane_bucket_sql_path_matches_column_path(spark):
-    """Round-11 build-time pin: hyperplane_bucket(str) — the one-parse
-    SQL fast path — must reproduce hyperplane_bucket(Column) bucket for
-    bucket in all three modes (frozen-planes exact, frozen-planes
-    double, default sin directions), including NULL vectors (bucket 0
-    semantics ride the NULL projection on both paths)."""
-    from pyspark.sql import functions as F
+_SIGN_PLANES_8 = [
+    [int(c) for c in row]
+    for row in np.random.default_rng(7).integers(-127, 128, size=(6, 8))
+]
 
+
+def _ref_bucket(v, dim, n_planes, planes, exact):
+    """numpy sign bits of each plane's projection.  Exact mode projects the
+    decimal(12,6) micro-units (shortest rendering, HALF_UP) onto integer
+    planes in exact integers; double modes fold sequentially in IEEE
+    doubles (``aggregate``'s order), the default planes being
+    sin(p·1009 + i·9973).  A NULL vector or element makes the projection
+    NULL, so every bit is 0."""
+    from tests.test_vector_units import ref_units
+
+    if v is None or any(x is None for x in v):
+        return 0
+    signs = []
+    for p in range(n_planes):
+        if exact:
+            proj = sum(ref_units(x) * c for x, c in zip(v, planes[p]))
+        else:
+            proj = 0.0
+            for i, x in enumerate(v):
+                c = float(planes[p][i]) if planes else math.sin(p * 1009 + i * 9973)
+                proj = proj + float(x) * c
+        signs.append(proj > 0)
+    return int(np.dot(np.array(signs, dtype=np.int64), 1 << np.arange(n_planes)))
+
+
+def test_hyperplane_bucket_matches_numpy_sign_bits(spark):
+    """hyperplane_bucket in all three modes (frozen planes exact, frozen
+    planes double, default sin directions) against numpy sign bits: on
+    adversarial dim-8 rows (NULL vector, NULL element, signed zeros,
+    half-ulp values, a zero vector, sign-boundary integers) and on 200
+    real sf0.001 embeddings with the declared x4 planes.  Exact mode also
+    runs from a precomputed ``units`` column, lsh_neighbor_pairs' form."""
+    from r_e_hive__spark.functions import vector as V
     from r_e_hive__spark.operators.similarity import hyperplane_bucket
     from r_e_hive__spark.queries._lsh_planes import _LSH_PLANES
 
-    emb = (
+    rng = np.random.default_rng(11)
+    adversarial = [
+        (0, None),
+        (1, [0.5, None] + [0.1] * 6),
+        (2, [-0.0, 0.0] * 4),
+        (3, [0.0] * 8),
+        (4, [5e-7, -5e-7, 1.5e-6, -2.5e-6, 4.9e-7, -4.9e-7, 1e-7, 0.0]),
+        (5, [1.0, -1.0] * 4),
+    ] + [(10 + i, [float(x) for x in rng.normal(size=8)]) for i in range(40)]
+    small = spark.createDataFrame(adversarial, "vec_id LONG, embedding ARRAY<DOUBLE>")
+    real = (
         spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-        .select("vec_id", "embedding")
+        .select("vec_id", F.col("embedding").cast("array<double>"))
         .limit(200)
     )
-    dim = len(_LSH_PLANES[0])
-    null_row = spark.createDataFrame(
-        [(999_999, None)], emb.schema
-    )
-    df = emb.unionByName(null_row)
-    cases = [
-        dict(planes=_LSH_PLANES, exact=True),
-        dict(planes=_LSH_PLANES, exact=False),
-        dict(planes=None, exact=False),
-    ]
-    for kw in cases:
-        got = df.select(
+    dim64 = len(_LSH_PLANES[0])
+    for df, dim, planes in ((small, 8, _SIGN_PLANES_8), (real, dim64, _LSH_PLANES)):
+        n_planes = len(planes) if dim == 8 else 16
+        vecs = {r["vec_id"]: r["embedding"] for r in df.collect()}
+        cases = {
+            "exact": dict(planes=planes, exact=True),
+            "planes": dict(planes=planes, exact=False),
+            "sin": dict(planes=None, exact=False),
+        }
+        with_u = df.withColumn("_u", F.expr(V.units_arr_sql("embedding")))
+        got = with_u.select(
             "vec_id",
-            hyperplane_bucket("embedding", dim, 16, **kw).alias("s"),
-            hyperplane_bucket(F.col("embedding"), dim, 16, **kw).alias("c"),
+            *[
+                hyperplane_bucket("embedding", dim, n_planes, **kw).alias(name)
+                for name, kw in cases.items()
+            ],
+            hyperplane_bucket(
+                "embedding", dim, n_planes, planes=planes, exact=True, units="_u"
+            ).alias("exact_u"),
         ).collect()
+        assert len(got) == len(vecs)
         for r in got:
-            assert r["s"] == r["c"], (r["vec_id"], kw)
+            v = vecs[r["vec_id"]]
+            for name, kw in cases.items():
+                want = _ref_bucket(v, dim, n_planes, kw["planes"], kw["exact"])
+                assert r[name] == want, (r["vec_id"], name, r[name], want)
+            assert r["exact_u"] == r["exact"], r["vec_id"]
 
 
 def test_hyperplane_bucket_sql_guard_still_raises(spark):
@@ -427,27 +475,55 @@ def test_hyperplane_bucket_sql_guard_still_raises(spark):
     from r_e_hive__spark.queries._lsh_planes import _LSH_PLANES
 
     dim = len(_LSH_PLANES[0])
-    df = spark.createDataFrame([(1, [0.5, 0.25])], "vec_id LONG, embedding ARRAY<DOUBLE>")
-    try:
-        df.select(
-            hyperplane_bucket("embedding", dim, 16, planes=_LSH_PLANES, exact=False)
-        ).collect()
-    except Exception as exc:
-        assert "vector dim" in str(exc)
-    else:
-        raise AssertionError("dimension guard did not fire on the SQL path")
+    for vec in ([0.5, 0.25], []):
+        df = spark.createDataFrame(
+            [(1, vec)], "vec_id LONG, embedding ARRAY<DOUBLE>"
+        )
+        for kw in (
+            dict(planes=_LSH_PLANES, exact=False),
+            dict(planes=_LSH_PLANES, exact=True),
+            dict(planes=None, exact=False),
+        ):
+            with pytest.raises(Exception, match="vector dim"):
+                df.select(hyperplane_bucket("embedding", dim, 16, **kw)).collect()
 
 
 def test_bq_dotted_and_backtick_identifiers():
-    """ADVICE-r11 pin: _bq renders str column args with F.col semantics —
-    dots separate nested-field path segments, embedded backticks are
-    doubled per segment (no identifier breakout)."""
-    from r_e_hive__spark.operators.similarity import _bq
+    """ADVICE-r11 pin: sql_ident renders str column args with F.col
+    semantics — dots separate nested-field path segments, embedded
+    backticks are doubled per segment (no identifier breakout)."""
+    from r_e_hive__spark.functions import sql_ident
 
-    assert _bq("embedding") == "`embedding`"
-    assert _bq("s.embedding") == "`s`.`embedding`"
-    assert _bq("we`ird") == "`we``ird`"
-    assert _bq("a.b`c") == "`a`.`b``c`"
+    assert sql_ident("embedding") == "`embedding`"
+    assert sql_ident("s.embedding") == "`s`.`embedding`"
+    assert sql_ident("we`ird") == "`we``ird`"
+    assert sql_ident("a.b`c") == "`a`.`b``c`"
+
+
+def test_column_where_name_required_raises_type_error(spark):
+    """The SQL-rendered builders take column NAMES.  A Column must fail
+    with a TypeError that says so, not PySpark's "'Column' object is not
+    callable" (Column.__getattr__ turns .split into a field reference)."""
+    from r_e_hive__spark.functions import sql_ident
+    from r_e_hive__spark.operators.similarity import (
+        assign_centroid,
+        hyperplane_bucket,
+        probe_centroids,
+    )
+
+    col = F.col("embedding")
+    calls = [
+        lambda: sql_ident(col),
+        lambda: hyperplane_bucket(col, 8, 4),
+        lambda: hyperplane_bucket(
+            "embedding", 8, 4, planes=[[1] * 8] * 4, exact=True, units=col
+        ),
+        lambda: assign_centroid(col, [[1.0] * 8]),
+        lambda: probe_centroids(col, [[1.0] * 8], 1, exact=True),
+    ]
+    for call in calls:
+        with pytest.raises(TypeError, match=r"expects a column name \(str\)"):
+            call()
 
 
 def test_brute_force_topk_nested_struct_vec_col(spark, embeddings):
